@@ -14,6 +14,13 @@ Scale discipline: renderers consume ONLY the already-aggregated result
 tables (verdicts, summary) plus a bounded sample of violation rows —
 ``toPandas()`` happens strictly after aggregation, never on the fact table
 (SURVEY.md §1.2 'pandas only at the final, already-aggregated sink').
+
+Pass-through: every renderer takes either the result DataFrames or rows the
+caller already fetched — the verdicts as a ``list`` of dicts (as returned by
+:func:`collect_verdicts`), the summary as a ``dict`` and the violations as a
+``list`` (as returned by :func:`collect_violation_sample`). Fetched rows are
+used as given and cost no Spark job, so a caller rendering several formats
+fetches once; ValidationJob fetches them from its written result tables.
 """
 
 from __future__ import annotations
@@ -48,23 +55,36 @@ def collect_violation_sample(violations, max_violations: int = 100) -> list[dict
     )]
 
 
-def _fetch(verdicts: DataFrame, summary: DataFrame, violations,
-           max_violations: int):
-    vs = [r.asDict() for r in
-          verdicts.orderBy("part_key", "constraint_id").collect()]
-    sm = summary.first().asDict() if summary is not None else {}
-    vio = collect_violation_sample(violations, max_violations)
-    return vs, sm, vio
-
-
 def _n_constraints(violations: DataFrame) -> int:
     # tiny distinct over the (already small) constraint-id domain
     return violations.select("constraint_id").distinct().count()
 
 
-def render_txt(verdicts: DataFrame, summary: DataFrame, violations,
-               suite_name: str, run_id: int, max_violations: int = 100) -> str:
-    vs, sm, vio = _fetch(verdicts, summary, violations, max_violations)
+def collect_verdicts(verdicts) -> list[dict]:
+    """Verdict rows as dicts in report order (part_key, then
+    constraint_id). The sort runs on the driver over the collected rows:
+    the verdict table is already aggregated (partitions × checks), and a
+    Spark sort would cost extra jobs for no less driver memory. A list is
+    returned unchanged (pass-through)."""
+    if isinstance(verdicts, list):
+        return verdicts
+    return sorted(
+        (r.asDict() for r in verdicts.collect()),
+        key=lambda r: (r["part_key"] is not None, r["part_key"] or "",
+                       r["constraint_id"]),
+    )
+
+
+def _summary_dict(summary) -> dict:
+    if summary is None or isinstance(summary, dict):
+        return summary or {}
+    return summary.first().asDict()
+
+
+def render_txt(verdicts, summary, violations, suite_name: str, run_id: int,
+               max_violations: int = 100) -> str:
+    vs, sm = collect_verdicts(verdicts), _summary_dict(summary)
+    vio = collect_violation_sample(violations, max_violations)
     lines = [
         "=" * 72,
         f"VALIDATION REPORT — suite={suite_name} run={run_id}",
@@ -92,9 +112,10 @@ def render_txt(verdicts: DataFrame, summary: DataFrame, violations,
     return "\n".join(lines) + "\n"
 
 
-def render_html(verdicts: DataFrame, summary: DataFrame, violations,
-                suite_name: str, run_id: int, max_violations: int = 100) -> str:
-    vs, sm, vio = _fetch(verdicts, summary, violations, max_violations)
+def render_html(verdicts, summary, violations, suite_name: str, run_id: int,
+                max_violations: int = 100) -> str:
+    vs, sm = collect_verdicts(verdicts), _summary_dict(summary)
+    vio = collect_violation_sample(violations, max_violations)
     e = _html.escape
 
     def chip(ok: bool) -> str:
@@ -144,14 +165,12 @@ def render_html(verdicts: DataFrame, summary: DataFrame, violations,
 """
 
 
-def export_json(verdicts: DataFrame, summary: DataFrame,
-                suite_name: str, run_id: int) -> str:
+def export_json(verdicts, summary, suite_name: str, run_id: int) -> str:
     """S9: machine-readable run result (verdicts + summary) as one JSON doc."""
-    vs = [r.asDict() for r in
-          verdicts.orderBy("part_key", "constraint_id").collect()]
-    sm = summary.first().asDict() if summary is not None else {}
     return json.dumps(
-        {"suite": suite_name, "run_id": run_id, "summary": sm, "verdicts": vs},
+        {"suite": suite_name, "run_id": run_id,
+         "summary": _summary_dict(summary),
+         "verdicts": collect_verdicts(verdicts)},
         indent=2, sort_keys=True, default=str,
     )
 

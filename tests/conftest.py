@@ -14,7 +14,10 @@ N_TEST_CLIPS = 2400
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("dqcs-tests", cores=8, shuffle_partitions=8)
+    # cores follow the host (SPARK_GRAFT_CPUS); shuffle partitions stay
+    # fixed so every plan the tests audit keeps its shape on any core count
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("dqcs-tests", cores=cores, shuffle_partitions=8)
     yield s
 
 

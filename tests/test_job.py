@@ -736,3 +736,111 @@ def test_quarantine_split_and_sink(spark, clips_dir, tmp_path):
     disk = spark.read.parquet(q["path"])
     assert disk.count() == n_bad and "failed_constraints" in disk.columns
     jr.result.unpersist()
+
+
+def test_job_resume_records_skipped_prior_violations_merge(
+    spark, clips_dir, tmp_path
+):
+    """A resumed run whose prior run left an empty violations/ directory
+    (crashed mid-write) records the skipped violation merge in the manifest
+    instead of dropping it silently; the carried verdicts still cover every
+    partition."""
+    import shutil
+
+    out = str(tmp_path / "job_skip_merge")
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
+    job = ValidationJob(_suite(), out)
+    jr1 = job.run(clips, payload=False, formats=())
+    m1 = job.manifests.load(jr1.manifest.run_id)
+    done = [pk for pk in m1.partitions if pk != GLOBAL_PART][:2]
+    m1.partitions = {pk: m1.partitions[pk] for pk in done}
+    m1.status = "running"
+    job.manifests.save(m1)
+    prev_viol = os.path.join(out, f"run_{m1.run_id:06d}", "violations")
+    shutil.rmtree(prev_viol)
+    os.makedirs(prev_viol)
+
+    jr2 = job.run(clips, payload=False, formats=())
+    skipped = jr2.manifest.input_lineage["prior_violations_merge_skipped"]
+    assert skipped["from_run"] == m1.run_id
+    assert skipped["error"].split(":")[0].endswith("Exception")
+    on_disk = job.manifests.load(jr2.manifest.run_id).input_lineage
+    assert on_disk["prior_violations_merge_skipped"] == skipped
+    parts = {
+        r["part_key"]
+        for r in jr2.result.verdicts.select("part_key").distinct().collect()
+    }
+    all_parts = {
+        str(r["part_key"])
+        for r in clips.select("part_key").distinct().collect()
+    }
+    assert all_parts <= parts and set(done) <= parts
+
+
+def _last_spark_job_id(spark) -> int:
+    """Id of the newest Spark job. Found by walking job ids upward, not by
+    job group: the runner's table-check pool threads launch jobs with no
+    group."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    last = max(st.getJobIdsForGroup(None) or [-1])
+    while st.getJobInfo(last + 1) is not None:
+        last += 1
+    return last
+
+
+def test_job_extra_report_formats_cost_no_spark_jobs(spark, clips_dir, tmp_path):
+    """Every report format renders from rows the job fetched once, so
+    adding HTML and JSON to TXT launches no extra Spark job."""
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
+    n_jobs = {}
+    for formats in (("txt",), ("txt", "html", "json")):
+        # both runs start cold: an earlier test may have left this input's
+        # checked table cached, which would skip one run's cache fill
+        spark.catalog.clearCache()
+        job = ValidationJob(_suite(), str(tmp_path / "_".join(formats)))
+        before = _last_spark_job_id(spark)
+        jr = job.run(clips, payload=False, formats=formats)
+        n_jobs[formats] = _last_spark_job_id(spark) - before
+        assert set(jr.report_paths) == set(formats)
+    assert len(set(n_jobs.values())) == 1, n_jobs
+
+
+def test_job_reports_match_dataframe_render(spark, clips_dir, tmp_path):
+    """The job renders every report from rows fetched once from its written
+    result tables. Rendering again through the DataFrame path gives the
+    same bytes, and the manifest's per-partition verdict metrics are the
+    rows of the written verdicts table."""
+    from doc_quality_check_spark.suite.report import (
+        export_json,
+        render_html,
+        render_txt,
+    )
+
+    out = str(tmp_path / "job_eq")
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
+    job = ValidationJob(_suite(), out)
+    jr = job.run(clips, payload=False)
+    res, rid = jr.result, jr.manifest.run_id
+    assert res.violations.count() > 0  # the sample section is not "(none)"
+    want = {
+        "txt": render_txt(res.verdicts, res.summary, res.violations,
+                          "job_meta", rid),
+        "html": render_html(res.verdicts, res.summary, res.violations,
+                            "job_meta", rid),
+        "json": export_json(res.verdicts, res.summary, "job_meta", rid),
+    }
+    for fmt, content in want.items():
+        with open(jr.report_paths[fmt]) as fh:
+            assert fh.read() == content, fmt
+
+    table: dict[str, dict] = {}
+    verd = spark.read.parquet(os.path.join(out, f"run_{rid:06d}", "verdicts"))
+    for r in verd.collect():
+        table.setdefault(r["part_key"], {})[r["constraint_id"]] = {
+            k: r[k] for k in ("n_rows", "n_violations", "passed", "metric_value")
+        }
+    m = job.manifests.load(rid)
+    assert {pk: p["checks"] for pk, p in m.partitions.items()} == table
+    res.unpersist()
