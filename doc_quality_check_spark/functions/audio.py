@@ -827,9 +827,9 @@ def with_audio_metrics(df, payload_col: str = "bytes", codec_col: str = "codec",
         df = df.coalesce(cap)
     udf = audio_metrics_fast_udf if fast else audio_metrics_udf
     m = udf(F.col(payload_col), F.col(codec_col))
-    df = df.withColumn("_m", m)
-    for f in AUDIO_METRICS_SCHEMA.fields:
-        df = df.withColumn(f.name, F.col(f"_m.{f.name}"))
+    df = df.withColumn("_m", m).withColumns(
+        {f.name: F.col(f"_m.{f.name}") for f in AUDIO_METRICS_SCHEMA.fields}
+    )
     return df.drop("_m", payload_col)
 
 

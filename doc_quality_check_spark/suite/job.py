@@ -7,9 +7,15 @@ summary), extended with the north rule's checkpoint/resume semantics:
 
 1. start a manifest run (auto-increment id, input lineage, constraint
    versions — suite/manifest.py);
-2. skip partitions the latest complete-or-crashed run already validated
-   (resume = anti-join on the manifest's completed partition set, which
-   partition-prunes because part_key is the table's partition column);
+2. skip partitions the latest complete-or-crashed run already validated:
+   the manifest's completed partition set becomes a one-column key table
+   (one Arrow hand-off, a LocalRelation), the runner drops those partitions
+   by a broadcast left-anti join on part_key, and their prior verdicts and
+   violation rows are read from that run's parquet by a broadcast left-semi
+   join. The join runs on scanned rows: it does not prune the files of a
+   physically partitioned table. A prior run whose verdicts table never
+   committed (no ``_SUCCESS`` marker) is not resumed from: the run
+   re-validates everything and records why;
 3. run the SuiteRunner;
 4. write the violation rows and the verdict rows as parquet result tables,
    each exactly once, and rebind the run's result to the written copies:
@@ -30,7 +36,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from doc_quality_check_spark.suite.manifest import (
     ManifestStore,
@@ -46,7 +52,14 @@ from doc_quality_check_spark.suite.report import (
     split_quarantine,
     write_report,
 )
-from doc_quality_check_spark.suite.runner import RunResult, SuiteRunner
+from doc_quality_check_spark.suite.runner import (
+    VERDICT_SCHEMA,
+    RunResult,
+    SuiteRunner,
+    join_part_keys,
+    part_key_col,
+    part_key_table,
+)
 from doc_quality_check_spark.suite.spec import CheckSuite, default_suite
 
 
@@ -126,6 +139,15 @@ class ValidationJob:
                 if prev_schema is not None and prev_schema != cur_schema_chk:
                     completed = []
                     resume_rejected = "schema_changed_since_crashed_run"
+        # the carried verdicts are read from the prior run's committed
+        # verdicts table: without it a skip would lose their verdicts, so
+        # re-validate everything instead
+        prev_dir = prev and os.path.join(self.out_dir, f"run_{prev.run_id:06d}")
+        if completed and not os.path.exists(
+            os.path.join(prev_dir, "verdicts", "_SUCCESS")
+        ):
+            completed = []
+            resume_rejected = "prior_verdicts_missing"
         m = self.manifests.start_run(suite, input_files=input_files)
         if _merge_prev is not None and prev is not None:
             m.input_lineage["incremental_from_run"] = prev.run_id
@@ -187,18 +209,18 @@ class ValidationJob:
             if c.constraint_id in revalidate and c.is_row_level
         ]
         sub_res = None
+        spark = clips.sparkSession
+        skip_keys = part_key_table(spark, completed) if completed else None
         if reval_checks and completed:
-            from doc_quality_check_spark.suite.runner import part_key_col
-
             sub_suite = CheckSuite(
                 name=f"{suite.name}__reval",
                 checks=reval_checks,
                 partition_by=suite.partition_by,
                 settings=suite.settings,
             )
-            pk = part_key_col(suite.partition_by)
             sub_res = SuiteRunner(sub_suite).run(
-                clips.filter(pk.isin(list(completed))),
+                join_part_keys(clips, part_key_col(suite.partition_by),
+                               skip_keys, "left_semi"),
                 payload=payload,
             )
             res.verdicts = res.verdicts.unionByName(sub_res.verdicts)
@@ -213,51 +235,41 @@ class ValidationJob:
 
         # Merge the prior (crashed) run's per-partition verdicts for the
         # partitions this run skipped, so a resumed run's verdict table has
-        # FULL coverage of the input, not just the remainder. Global
-        # ("__global__") verdicts are recomputed on the full input by the
-        # runner and are never merged from the prior run.
-        if completed and prev is not None:
-            from doc_quality_check_spark.suite.runner import VERDICT_SCHEMA
-
+        # FULL coverage of the input, not just the remainder: a broadcast
+        # semi-join of that run's verdicts parquet on the skip set's key
+        # table. Global ("__global__") verdicts are recomputed on the full
+        # input by the runner and never enter the skip set.
+        if completed:
             # table-level checks ALWAYS recompute on the full input — their
             # verdicts must not also merge from the prior run (per-partition
             # drift rows carry real part_keys and would duplicate otherwise).
             # From the UNPRUNED suite: a check pruned THIS run (no baseline/
             # catalog passed) must not sneak stale verdicts in via the merge.
-            table_cids = {
+            # Version-changed / added / removed constraints never carry
+            # forward either: changed ones were just recomputed by the
+            # revalidation pass above, removed ones no longer exist.
+            stale = sorted(revalidate | {
                 c.constraint_id for c in self.suite.checks if not c.is_row_level
-            }
-            prior_rows = []
-            for pk in completed:
-                for cid, v in prev.partitions.get(pk, {}).get("checks", {}).items():
-                    # version-changed / added / removed constraints never
-                    # carry forward: changed ones were just recomputed by the
-                    # revalidation pass above, removed ones no longer exist
-                    if cid in table_cids or cid in revalidate:
-                        continue
-                    prior_rows.append((
-                        pk, cid,
-                        None if v.get("n_rows") is None else int(v["n_rows"]),
-                        None if v.get("n_violations") is None else int(v["n_violations"]),
-                        v.get("passed"),
-                        None if v.get("metric_value") is None else float(v["metric_value"]),
-                    ))
-            if prior_rows:
-                prior_df = clips.sparkSession.createDataFrame(prior_rows, VERDICT_SCHEMA)
-                res.verdicts = res.verdicts.unionByName(prior_df)
+            })
+            prior = join_part_keys(
+                spark.read.schema(VERDICT_SCHEMA).parquet(
+                    os.path.join(prev_dir, "verdicts")),
+                F.col("part_key"), skip_keys, "left_semi",
+            )
+            res.verdicts = res.verdicts.unionByName(
+                prior.filter(~F.col("constraint_id").isin(stale))
+            )
             # Merge the prior run's VIOLATION rows for the skipped partitions
             # too (violations carry part_key since round 2), so the resumed
             # run's violations table backs every merged verdict. If the prior
             # run's violations table is missing, empty or unreadable (it
-            # crashed before or during that write), only the manifest's
-            # verdict metrics survive: the skip is recorded, not invented.
-            from pyspark.sql import functions as F
-
-            prev_viol = os.path.join(
-                self.out_dir, f"run_{prev.run_id:06d}", "violations")
+            # crashed before or during that write), only the carried verdict
+            # metrics survive: the skip is recorded, not invented.
             try:
-                keep = clips.sparkSession.read.parquet(prev_viol).filter(
-                    F.col("part_key").isin(completed)
+                keep = join_part_keys(
+                    spark.read.parquet(os.path.join(prev_dir, "violations")),
+                    F.col("part_key"),
+                    skip_keys, "left_semi",
                 )
                 if revalidate:
                     # changed-version constraints' violation rows were
@@ -280,7 +292,6 @@ class ValidationJob:
         # report read that copy instead of re-executing the lazy result plans
         # (verdict grouping, per-partition table checks, violation unions),
         # and all of them describe the same materialization
-        spark = clips.sparkSession
         run_dir = os.path.join(self.out_dir, f"run_{m.run_id:06d}")
         viol_path = os.path.join(run_dir, "violations")
         verd_path = os.path.join(run_dir, "verdicts")
@@ -454,8 +465,6 @@ class ValidationJob:
         )
         src = res.checked
         if per_part and "part_key" not in src.columns:
-            from doc_quality_check_spark.suite.runner import part_key_col
-
             src = src.withColumn(
                 "part_key", part_key_col(self.suite.partition_by)
             )
@@ -519,7 +528,6 @@ class ValidationJob:
         ``Check.version`` when you change a threshold/params — the version
         string IS the change signal (params are not content-hashed)."""
         from doc_quality_check_spark.operators.joins import snapshot_diff
-        from doc_quality_check_spark.suite.runner import part_key_col
 
         prev_m = self.manifests.latest_complete()
         part_cols = self.suite.partition_by

@@ -24,7 +24,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -82,14 +84,51 @@ def _param_bool(v) -> bool:
 
 def part_key_col(part_cols: list[str]):
     """The canonical part_key expression — shared by the verdict groupBy and
-    the resume filter so multi-column partition keys resume correctly. NULL
-    partition values map to the '__null__' sentinel: they form their own
-    verdict/resume unit instead of producing NULL keys (which would break
-    manifest JSON keys and make the resume isin() filter drop the rows)."""
+    the resume skip-set join so multi-column partition keys resume
+    correctly. NULL partition values map to the '__null__' sentinel: they
+    form their own verdict/resume unit instead of producing NULL keys (which
+    would break manifest JSON keys and never match the skip set's key
+    table). The skip set joins on this derived expression, not on a
+    partition column, so a left-anti join against it prunes no files of a
+    physically partitioned table: skipped rows are still scanned, then
+    dropped by the broadcast join before decode."""
     if not part_cols:
         return F.lit(GLOBAL_PART)
     parts = [F.coalesce(F.col(c).cast("string"), F.lit(NULL_PART)) for c in part_cols]
     return parts[0] if len(parts) == 1 else F.concat_ws("/", *parts)
+
+
+def local_frame(spark, schema: StructType, rows: list[tuple]) -> DataFrame:
+    """``rows`` as a DataFrame of exactly ``schema`` (nullability included),
+    handed to the JVM as ONE Arrow table: the plan holds a LocalRelation.
+    ``createDataFrame`` on a Python list builds a LogicalRDD instead, which
+    every job reading it must parallelize first. The coalesce makes the
+    scan one task: a LocalRelation otherwise splits into one task per row
+    up to the core count."""
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )).coalesce(1)
+
+
+_SKIP_KEY = "__skip_key"
+_SKIP_KEY_SCHEMA = StructType([StructField(_SKIP_KEY, StringType())])
+
+
+def part_key_table(spark, keys: list[str]) -> DataFrame:
+    """A skip set (resume / incremental part keys) as a one-column key table
+    (:func:`local_frame`): one Arrow hand-off whatever the key count, where
+    a literal ``isin`` list crosses py4j once per key."""
+    return local_frame(spark, _SKIP_KEY_SCHEMA, [(k,) for k in keys])
+
+
+def join_part_keys(df: DataFrame, key, table: DataFrame, how: str) -> DataFrame:
+    """Keep (``how="left_semi"``) or drop (``"left_anti"``) the rows of
+    ``df`` whose ``key`` expression is in the :func:`part_key_table`
+    ``table``, by a broadcast hash join; the output has ``df``'s columns."""
+    return df.join(F.broadcast(table), key == F.col(_SKIP_KEY), how)
 
 
 @dataclass
@@ -161,23 +200,25 @@ class SuiteRunner:
         completed_partitions: list[str] | None = None,
     ) -> RunResult:
         """Execute the suite. ``completed_partitions`` (from a prior run's
-        manifest) are skipped for the ROW-LEVEL path only — the resume filter
-        is partition-pruned because ``part_key`` is the table's partition
-        column. Table-level checks (uniqueness, referential, completeness,
-        drift, …) always see the FULL input: a duplicate key spanning a
-        completed and a pending partition must still be caught, and
-        row_count_min must not falsely fail on the resumed subset."""
+        manifest) are skipped for the ROW-LEVEL path only, by a broadcast
+        left-anti join of :func:`part_key_col` against the skip set's key
+        table (:func:`part_key_table`): one Arrow hand-off for any number of
+        keys. The join runs on the scanned rows, so it does not prune the
+        files of a physically partitioned table. Table-level checks
+        (uniqueness, referential, completeness, drift, …) always see the FULL
+        input: a duplicate key spanning a completed and a pending partition
+        must still be caught, and row_count_min must not falsely fail on the
+        resumed subset."""
         suite = self.suite
         part_cols = suite.partition_by
         full_clips = clips
         self._run_caches: list[DataFrame] = []
         resuming = bool(completed_partitions and part_cols)
         if resuming:
-            pk = part_key_col(part_cols)
-            # NULL part keys make isin() NULL → the row would be silently
-            # dropped; coalesce keeps them (they were never marked complete)
-            clips = clips.filter(
-                F.coalesce(~pk.isin(list(completed_partitions)), F.lit(True))
+            clips = join_part_keys(
+                clips, part_key_col(part_cols),
+                part_key_table(clips.sparkSession, completed_partitions),
+                "left_anti",
             )
 
         row_checks = suite.row_checks()
@@ -570,9 +611,9 @@ class SuiteRunner:
                 self._run_caches.append(resume_cache)
 
         if table_verdict_rows:
-            spark = df.sparkSession
-            tv = spark.createDataFrame(table_verdict_rows, VERDICT_SCHEMA)
-            verdicts = verdicts.unionByName(tv)
+            verdicts = verdicts.unionByName(
+                local_frame(df.sparkSession, VERDICT_SCHEMA, table_verdict_rows)
+            )
         for vdf in table_verdict_dfs:
             verdicts = verdicts.unionByName(vdf)
 
@@ -601,7 +642,7 @@ class SuiteRunner:
         aggregation map-side, a single shuffle total. Multi-column partition
         keys collapse into one '/'-joined part_key string."""
         if not row_checks:
-            return df.sparkSession.createDataFrame([], VERDICT_SCHEMA)
+            return local_frame(df.sparkSession, VERDICT_SCHEMA, [])
         part = part_key_col(part_cols)
         aggs = [F.count(F.lit(1)).alias("n_rows")] + [
             F.sum(F.when(~F.col(PASS_PREFIX + c.constraint_id), 1).otherwise(0))

@@ -844,3 +844,145 @@ def test_job_reports_match_dataframe_render(spark, clips_dir, tmp_path):
     m = job.manifests.load(rid)
     assert {pk: p["checks"] for pk, p in m.partitions.items()} == table
     res.unpersist()
+
+
+def _many_key_snapshot(spark, clips_dir, path, n_buckets=1024):
+    """~800 metadata-only rows, first row per clip_id, re-keyed to
+    crc32(clip_id) mod ``n_buckets`` string part keys (hundreds of distinct
+    keys), written once so every job reads the same rows."""
+    (
+        load_clips(spark, clips_dir).drop("bytes").limit(800)
+        .dropDuplicates(["clip_id"])
+        .withColumn("part_key", F.format_string(
+            "p%05d", (F.crc32(F.col("clip_id")) % n_buckets).cast("int")))
+        .write.parquet(path)
+    )
+    return spark.read.parquet(path)
+
+
+def _result_rows(jr):
+    verd = sorted(
+        tuple(r) for r in jr.result.verdicts.select(
+            "part_key", "constraint_id", "n_rows", "n_violations", "passed",
+            "metric_value").collect()
+    )
+    viol = sorted(
+        tuple(r) for r in jr.result.violations.select(
+            "clip_id", "constraint_id", "part_key").collect()
+    )
+    return verd, viol
+
+
+def test_job_resume_at_many_part_keys_matches_clean_run(spark, clips_dir, tmp_path):
+    """Crash-resume over hundreds of part keys with half of them recorded:
+    the resumed run's verdict and violation rows equal the clean run's."""
+    snap = _many_key_snapshot(spark, clips_dir, str(tmp_path / "snap"))
+    job = ValidationJob(_suite(), str(tmp_path / "out"))
+    jr1 = job.run(snap, payload=False, formats=())
+    clean = _result_rows(jr1)
+    m1 = job.manifests.load(jr1.manifest.run_id)
+    keys = sorted(pk for pk in m1.partitions if pk != GLOBAL_PART)
+    assert len(keys) >= 400
+    done = keys[::2]
+    m1.partitions = {pk: m1.partitions[pk] for pk in done}
+    m1.status = "running"
+    job.manifests.save(m1)
+
+    jr2 = job.run(snap, payload=False, formats=())
+    assert jr2.manifest.input_lineage["resumed_from_partitions"] == done
+    # the skipped half was not re-validated
+    checked = {r["part_key"] for r in
+               jr2.result.checked.select("part_key").distinct().collect()}
+    assert checked.isdisjoint(done)
+    assert _result_rows(jr2) == clean
+
+
+def test_job_incremental_at_many_part_keys_matches_full_run(
+    spark, clips_dir, tmp_path
+):
+    """run_incremental over hundreds of part keys with three touched
+    partitions: its verdict and violation rows equal a full run's on the
+    new snapshot."""
+    old = _many_key_snapshot(spark, clips_dir, str(tmp_path / "snap_old"))
+    keys = sorted(r["part_key"] for r in old.select("part_key").distinct().collect())
+    touched = keys[1:4]
+    new_p = str(tmp_path / "snap_new")
+    old.withColumn(
+        "dur_ms",
+        F.when(F.col("part_key").isin(touched), F.lit(-5)).otherwise(F.col("dur_ms")),
+    ).write.parquet(new_p)
+    new = spark.read.parquet(new_p)
+
+    oracle = ValidationJob(_suite(), str(tmp_path / "oracle")).run(
+        new, payload=False, resume=False, formats=())
+    job = ValidationJob(_suite(), str(tmp_path / "out"))
+    jr1 = job.run(old, payload=False, resume=False, formats=())
+    jr2 = job.run_incremental(new, old, id_col="clip_id", payload=False,
+                              formats=())
+    lin = jr2.manifest.input_lineage
+    assert lin["incremental_from_run"] == jr1.manifest.run_id
+    assert len(lin["resumed_from_partitions"]) == len(keys) - len(touched)
+    assert _result_rows(jr2) == _result_rows(oracle)
+
+
+def test_job_resume_without_prior_verdicts_table_revalidates_all(
+    spark, clips_dir, tmp_path
+):
+    """A crashed run whose verdicts table is gone cannot carry verdicts:
+    the resume skips nothing, every partition is re-validated, and the
+    reason is recorded in memory and on disk."""
+    import shutil
+
+    out = str(tmp_path / "job_no_verdicts")
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
+    job = ValidationJob(_suite(), out)
+    jr1 = job.run(clips, payload=False, formats=())
+    m1 = job.manifests.load(jr1.manifest.run_id)
+    m1.partitions = {
+        pk: m1.partitions[pk]
+        for pk in [pk for pk in m1.partitions if pk != GLOBAL_PART][:2]
+    }
+    m1.status = "running"
+    job.manifests.save(m1)
+    shutil.rmtree(os.path.join(out, f"run_{m1.run_id:06d}", "verdicts"))
+
+    jr2 = job.run(clips, payload=False, formats=())
+    lin = jr2.manifest.input_lineage
+    assert "resumed_from_partitions" not in lin
+    assert lin["resume_rejected"] == "prior_verdicts_missing"
+    on_disk = job.manifests.load(jr2.manifest.run_id).input_lineage
+    assert on_disk["resume_rejected"] == "prior_verdicts_missing"
+    # every partition re-validated: each row check has a verdict on every
+    # partition, and their row counts add up to the whole input
+    all_parts = {str(r["part_key"]) for r in
+                 clips.select("part_key").distinct().collect()}
+    rows = jr2.result.verdicts.collect()
+    for cid in ("clip_id_not_null", "dur_range"):
+        got = [r for r in rows if r["constraint_id"] == cid]
+        assert {r["part_key"] for r in got} == all_parts
+        assert sum(r["n_rows"] for r in got) == clips.count()
+
+
+def test_runner_verdicts_plan_has_no_rdd_relation(spark, clips_dir):
+    """Table-level verdict rows enter the plan as a LocalRelation: no
+    LogicalRDD (whose every use runs a parallelize stage) remains under
+    the verdicts."""
+    from doc_quality_check_spark.suite.runner import SuiteRunner
+
+    suite = CheckSuite(
+        name="local_rows",
+        partition_by=["part_key"],
+        checks=[
+            Check("dur_range", "in_range", "dur_ms", {"min": 1, "max": 120000}),
+            Check("clip_id_unique", "unique", "clip_id"),
+            Check("enough_rows", "row_count_min", None, {"min_rows": 1}),
+        ],
+    )
+    res = SuiteRunner(suite).run(
+        load_clips(spark, clips_dir).drop("bytes").limit(200), payload=False)
+    plan = res.verdicts._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
+    cids = {r["constraint_id"] for r in res.verdicts.collect()}
+    assert {"clip_id_unique", "enough_rows"} <= cids
+    res.unpersist()

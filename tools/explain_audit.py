@@ -226,6 +226,31 @@ def run_audits(spark) -> list[tuple[str, bool, str]]:
           "bytes" not in p and "ArrowEvalPython" in p)
     audit("audio_decode_metrics no join", "Join" not in p)
 
+    # 23. resume skip set: the runner drops completed partitions by a
+    # broadcast left-anti join against a key table held in the plan
+    # (LocalTableScan), never by a literal IN/INSET list over the part key,
+    # which crosses py4j once per key on the driver
+    from doc_quality_check_spark.suite.runner import SuiteRunner
+    from doc_quality_check_spark.suite.spec import Check, CheckSuite
+
+    clips = spark.range(64).select(
+        F.col("id").cast("string").alias("clip_id"),
+        F.format_string("p%02d", (F.col("id") % 16).cast("int")).alias("part_key"),
+    )
+    suite = CheckSuite(name="audit_resume", partition_by=["part_key"],
+                       checks=[Check("clip_id_not_null", "not_null", "clip_id")])
+    res = SuiteRunner(suite).run(
+        clips, payload=False,
+        completed_partitions=[f"p{i:02d}" for i in range(12)],
+    )
+    p = plan_of(res.checked)
+    res.unpersist()
+    anti = p.split("LeftAnti", 1)[1] if "LeftAnti" in p else ""
+    audit("resume skip set is a broadcast anti-join on a key table",
+          "BroadcastHashJoin" in p and "LocalTableScan" in anti
+          and "INSET" not in p and " IN (" not in p,
+          p[:200])
+
     return results
 
 
